@@ -91,10 +91,9 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
     ap.add_argument("change")
-    ap.add_argument("--benchmark", default=str(ROOT / "BENCHMARK.json"))
     args = ap.parse_args(argv)
 
-    spec = json.loads(Path(args.benchmark).read_text())
+    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     rules = {m["name"]: (m["better"], m.get("bound")) for m in spec["end_to_end"] + spec["per_layer"]}
     parent, change = load(args.parent), load(args.change)
     report = []

@@ -20,6 +20,9 @@ Document kinds follow the fixture families of ``tests/fixtures.py``:
 * ``empty`` — a document body without ledd: a success with zero chunks;
 * ``malformed`` — truncated XML: a poison document.
 
+A tree starts with the first five kinds; the daily change sets empty
+documents, break them and fix them again.
+
 Token sizes are estimated with the word-piece rule of the package's
 fallback counter (one token per 4 characters of a word, one per
 symbol). The generator does not import the package, so its output does
@@ -73,71 +76,56 @@ def word_tokens(word: str) -> int:
     return max(1, math.ceil(len(word) / 4))
 
 
-#: shares of the change-law, simple-law and list-split kinds
-CHANGE_SHARE, SIMPLE_SHARE, LISTSPLIT_SHARE = 0.08, 0.08, 0.005
+#: documents per generated tree
+N_DOCS = 60
+#: documents of each special kind in a tree; the rest are ``standard``.
+#: Empty and malformed documents arrive only through the daily change
+#: sets (see ``Corpus.apply_day``).
+KIND_COUNTS = {"oversize": 2, "listsplit": 1, "change": 5, "simple": 5}
 #: token sizes of the oversize ledd are evenly spaced over this range,
 #: endpoints included
 OVERSIZE_TOKENS = (7000, 14000)
+#: words per sentence: 3-5 words of about 2.1 tokens, about 9.4 tokens
+#: a sentence. ``chunk_document`` splits ledd of documents.parquet text
+#: of about 9k and 13.5k tokens into 141 and 1479 chunks (126k and 2.78M
+#: tokens out); generated ledd of those sizes give 141 and 1412 chunks
+#: (127k and 2.64M tokens out)
+SENTENCE_WORDS = (3, 5)
 #: articles per standard law: log-normal median and sigma, clip range
 ARTICLES_MEDIAN, ARTICLES_SIGMA, ARTICLES_RANGE = 5.0, 0.8, (1, 30)
 #: shares of a day's change set
 DAY_MODIFIED, DAY_ADDED, DAY_REMOVED = 0.03, 0.01, 0.01
 
 
-@dataclass(frozen=True)
-class CorpusSpec:
-    """Size and kind mix of a generated tree; the rest of the standard
-    laws are ``standard``."""
+def kinds() -> list[str]:
+    """The kind of every document index, the same for every seed."""
+    special = [k for k, c in KIND_COUNTS.items() for _ in range(c)]
+    out = ["standard"] * N_DOCS
+    # spread the special kinds evenly over the index range
+    step = N_DOCS / len(special)
+    for i, kind in enumerate(special):
+        out[int(i * step + step / 2)] = kind
+    return out
 
-    n_docs: int = 120
-    empty_share: float = 0.01
-    malformed_share: float = 0.01
-    #: documents with one plain over-max ledd
-    oversize_share: float = 0.015
 
-    def kinds(self) -> list[str]:
-        """The kind of every document index, fixed by the spec alone so
-        that every seed has exactly the same mix."""
-        n = self.n_docs
-        shares = {
-            "oversize": self.oversize_share,
-            "listsplit": LISTSPLIT_SHARE,
-            "empty": self.empty_share,
-            "malformed": self.malformed_share,
-            "change": CHANGE_SHARE,
-            "simple": SIMPLE_SHARE,
-        }
-        # a kind with a non-zero share appears at least once
-        counts = {k: max(1, round(s * n)) if s > 0 else 0 for k, s in shares.items()}
-        special = [k for k, c in counts.items() for _ in range(c)]
-        if len(special) > n:
-            raise ValueError("corpus too small for its kind shares")
-        out = ["standard"] * n
-        # spread the special kinds evenly over the index range
-        step = n / len(special)
-        for i, kind in enumerate(special):
-            out[int(i * step + step / 2)] = kind
-        return out
+def article_counts(seed: int) -> list[int]:
+    """Articles per document index: the log-normal's quantiles at evenly
+    spaced levels, dealt out in a seeded order, so every seed has the
+    same multiset of document sizes."""
+    lo, hi = ARTICLES_RANGE
+    dist = statistics.NormalDist(math.log(ARTICLES_MEDIAN), ARTICLES_SIGMA)
+    levels = list(range(N_DOCS))
+    random.Random(f"lovdata-bench-sizes:{seed}").shuffle(levels)
+    return [
+        min(hi, max(lo, round(math.exp(dist.inv_cdf((k + 0.5) / N_DOCS)))))
+        for k in levels
+    ]
 
-    def article_counts(self, seed: int) -> list[int]:
-        """Articles per document index: the log-normal's quantiles at
-        evenly spaced levels, dealt out in a seeded order, so every seed
-        has the same multiset of document sizes."""
-        lo, hi = ARTICLES_RANGE
-        dist = statistics.NormalDist(math.log(ARTICLES_MEDIAN), ARTICLES_SIGMA)
-        levels = list(range(self.n_docs))
-        random.Random(f"lovdata-bench-sizes:{seed}").shuffle(levels)
-        return [
-            min(hi, max(lo, round(math.exp(dist.inv_cdf((k + 0.5) / self.n_docs)))))
-            for k in levels
-        ]
 
-    def oversize_sizes(self) -> list[int]:
-        k = self.kinds().count("oversize")
-        lo, hi = OVERSIZE_TOKENS
-        if k == 1:
-            return [hi]
-        return [round(lo + (hi - lo) * i / (k - 1)) for i in range(k)]
+def oversize_sizes() -> list[int]:
+    k = KIND_COUNTS["oversize"]
+    lo, hi = OVERSIZE_TOKENS
+    return [round(lo + (hi - lo) * i / (k - 1)) for i in range(k)]
 
 
 class _Text:
@@ -146,8 +134,8 @@ class _Text:
     def __init__(self, rng: random.Random):
         self.rng = rng
 
-    def sentence(self, max_words: int = 18) -> tuple[str, int]:
-        n = self.rng.randint(5, max(5, max_words))
+    def sentence(self) -> tuple[str, int]:
+        n = self.rng.randint(*SENTENCE_WORDS)
         words = [self.rng.choice(WORDS) for _ in range(n)]
         words[0] = words[0].capitalize()
         tokens = sum(word_tokens(w) for w in words) + 1
@@ -333,19 +321,19 @@ class Corpus:
     currently in the tree; the oracle reads it instead of the disk.
     """
 
-    def __init__(self, root: str | Path, seed: int, spec: CorpusSpec):
+    def __init__(self, root: str | Path, seed: int):
         self.root = Path(root)
         self.seed = seed
-        kinds = spec.kinds()
-        sizes = iter(spec.oversize_sizes())
-        self._oversize = {i: next(sizes) for i, k in enumerate(kinds) if k == "oversize"}
-        self._articles = spec.article_counts(seed)
+        tree = kinds()
+        sizes = iter(oversize_sizes())
+        self._oversize = {i: next(sizes) for i, k in enumerate(tree) if k == "oversize"}
+        self._articles = article_counts(seed)
         self.docs: dict[str, Doc] = {}
         self.files: dict[str, tuple[str, bytes]] = {}
-        self._next_index = spec.n_docs
+        self._next_index = N_DOCS
         if self.root.exists():
             shutil.rmtree(self.root)
-        for i, kind in enumerate(kinds):
+        for i, kind in enumerate(tree):
             self._write(Doc(i, kind))
 
     def _write(self, doc: Doc) -> None:

@@ -34,12 +34,9 @@ from pathlib import Path
 
 import tables
 from spans import Tracer
-from corpus import WORDS, Corpus, CorpusSpec
+from corpus import WORDS, Corpus
 from oracle import PipelineOracle, QueryOracle, check_search
 
-#: the generated tree starts healthy: the daily change sets empty and
-#: break documents, and fix on the next day what they broke
-UPDATE_SPEC = CorpusSpec(n_docs=60, empty_share=0.0, malformed_share=0.0, oversize_share=0.034)
 #: one search per mode a day, always in this order
 MODES = ("vector", "keyword", "hybrid")
 SEARCH_K = 5
@@ -108,7 +105,7 @@ def _expected_counts(results: dict, before: dict) -> dict:
 
 
 def update_serve(run: Run) -> None:
-    corpus = Corpus(run.work / "tree", run.seed, UPDATE_SPEC)
+    corpus = Corpus(run.work / "tree", run.seed)
     store, state = run.work / "store", run.work / "state"
     oracle = PipelineOracle()
     results: dict = {}
