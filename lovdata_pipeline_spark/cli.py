@@ -34,7 +34,7 @@ def cmd_process(args) -> int:
     from lovdata_pipeline_spark.pipeline import run_pipeline
     from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
     from lovdata_pipeline_spark.sources.state_store import StateStore
-    from lovdata_pipeline_spark.sources.xml_corpus import manifest_diff, read_xml_corpus
+    from lovdata_pipeline_spark.sources.xml_corpus import read_xml_corpus
 
     spark = _spark("lg-process")
     store = ChunkStore(spark, args.store)
@@ -42,41 +42,21 @@ def cmd_process(args) -> int:
 
     from pyspark.sql import functions as F
 
+    # Every scanned file enters as ``added``: the pipeline's anti-join on
+    # (doc_id, hash) against PROCESSED state keeps the new, modified and
+    # previously failed documents (failed ones are retried every pass,
+    # reference state.is_processed, state.py:77-81). Removed documents
+    # come from the FULL state, so deleting a failed doc's file still
+    # drops its state row.
     docs = read_xml_corpus(spark, args.corpus)
-    # Two diffs with different scopes (matching the reference's retry +
-    # cleanup semantics):
-    #  * statuses for on-disk docs diff against the PROCESSED state only,
-    #    so a previously-FAILED doc shows added/modified and is retried
-    #    every run (reference state.is_processed consults only the
-    #    processed map, state.py:77-81);
-    #  * the removed set diffs against the FULL state, so deleting a
-    #    failed doc's file still cleans up its state row.
-    def as_manifest(df):
-        return (
-            df.select("doc_id", F.col("hash").alias("source_hash"))
-            .withColumn("dataset_name", F.lit(None).cast("string"))
-            .withColumn("relative_path", F.lit(None).cast("string"))
-        )
-
-    alive_diff = manifest_diff(docs, as_manifest(state.processed()))
-    docs_with_status = docs.drop("status").join(
-        alive_diff.filter(F.col("status") != "removed").select("doc_id", "status"),
+    removed = state.read().join(docs.select("doc_id"), "doc_id", "left_anti").select(
         "doc_id",
-        "left",
+        F.lit(None).cast("string").alias("dataset_name"),
+        F.lit(None).cast("string").alias("relative_path"),
+        F.lit(None).cast("string").alias("xml"),
+        F.col("hash").alias("source_hash"),
+        F.lit("removed").alias("status"),
     )
-    removed = (
-        manifest_diff(docs, as_manifest(state.read()))
-        .filter(F.col("status") == "removed")
-        .select(
-            "doc_id",
-            "dataset_name",
-            "relative_path",
-            F.lit(None).cast("string").alias("xml"),
-            "source_hash",
-            "status",
-        )
-    )
-    docs_with_status = docs_with_status.select(removed.columns).unionByName(removed)
 
     cfg = PipelineConfig(
         dataset_pattern=args.datasets,
@@ -90,7 +70,7 @@ def cmd_process(args) -> int:
         ),
         embedding_dims=args.embedding_dims,
     )
-    result = run_pipeline(docs_with_status, store, state, cfg)
+    result = run_pipeline(docs.unionByName(removed), store, state, cfg)
     print(
         json.dumps(
             {

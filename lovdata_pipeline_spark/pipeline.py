@@ -2,19 +2,26 @@
 
 The reference's fixed 4-stage DAG — sync → identify → process
 (chunk→embed→index) → cleanup (reference:
-orchestration/pipeline_orchestrator.py:116-173) — re-expressed as one
-declarative Spark job per stage:
+orchestration/pipeline_orchestrator.py:116-173) — as one pass whose
+outcome is decided once:
 
-  identify   anti-join manifest vs state           (ops 3-8)
-  process    chunk UDF → embed UDF → store upsert  (ops 9-24)
-  cleanup    store DELETE + state remove           (ops 26, 34)
+  identify   anti-join manifest vs processed state        (ops 3-8)
+  decide     chunk UDF over the changed documents, then one row per
+             changed or removed document: (doc_id, new hash, error,
+             good-chunk count, removed), materialized once; the pass's
+             tallies come from it
+  write      one store upsert of the embedded good chunks (ops 9-24),
+             one store delete of every document left without chunks
+             (failed, emptied or removed; op 26), then the state
+             commits (op 34) — each write guarded by its tally
 
 Failure semantics match the reference's per-document contract
 (file_processing_service.py:48-131): a poison document surfaces as an
-error row from the chunk UDF, lands in the failed side of the state
-table, contributes no chunks, and is retried on the next hash change.
-A document yielding zero chunks is a *success* with no chunks
-("obsolete law", file_processing_service.py:79-89).
+error row from the chunk UDF, loses any chunks of its old version, lands
+in the failed side of the state table, and is retried on every pass
+until it processes (only processed state is diffed against). A document
+yielding zero chunks is a *success* with no chunks ("obsolete law",
+file_processing_service.py:79-89).
 """
 
 from __future__ import annotations
@@ -60,121 +67,89 @@ def run_pipeline(
     """Run one incremental pass over a documents DataFrame.
 
     ``documents`` carries the manifest columns (doc_id, dataset_name,
-    relative_path, source_hash, status) plus ``xml`` content.
+    relative_path, source_hash, status) plus ``xml`` content; rows with
+    status ``removed`` name documents to clean up.
 
     ``provider`` is the embedding callable (``embedding.EmbeddingProvider``);
     default is the deterministic offline mock. Pass
     ``embedding.openai_compatible_provider(model=...)`` (optionally
-    wrapped in ``embedding.rate_limited``) for real vectors — before r10
-    there was no injection point, so a caller setting
-    ``config.embedding_model`` to a real model name got mock vectors
-    persisted under that label (r10 review).
+    wrapped in ``embedding.rate_limited``) for real vectors.
     """
     config = config or PipelineConfig()
     at = now or datetime.now(timezone.utc).isoformat()
 
-    manifest = filter_datasets(
-        documents.select("doc_id", "dataset_name", "relative_path", "source_hash", "status"),
-        config.dataset_pattern,
-    )
-
-    # --- identify (runs BEFORE the expensive chunk/embed stages) ----------
+    manifest = filter_datasets(documents, config.dataset_pattern)
     to_process = identify_changed(
         manifest, state.processed().select("doc_id", "hash"), config.force, config.limit
     )
     removed = identify_removed(manifest)
 
-    docs = documents.join(to_process.select("doc_id"), "doc_id", "left_semi")
-
-    # --- process: chunk → split poison docs → embed → upsert ---------------
-    chunked = chunk_documents_df(docs, config.chunk).cache()
+    chunked = chunk_documents_df(to_process, config.chunk).cache()
     try:
-        failed_docs = (
-            chunked.filter(F.col("error").isNotNull())
-            .select("document_id", "error")
-            .distinct()
+        # The pass's one decision: a row per changed or removed document
+        # with its new hash, its error and its good-chunk count. Every
+        # write below is a filter of this materialized frame.
+        per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(
+            F.max("error").alias("error"),
+            F.count(F.when(F.col("error").isNull(), 1)).alias("chunks"),
         )
-        good_chunks = chunked.filter(F.col("error").isNull())
-
-        enriched = embed_chunks_df(
-            good_chunks,
-            provider=provider or mock_hash_provider(config.embedding_dims),
-            model_name=config.embedding_model,
-            embedded_at=at,
-            batch_size=config.embed_batch_size,
-            dims=config.embedding_dims,
-        )
-        store.upsert_chunks(enriched)
-
-        # A reprocessed doc that now yields ZERO chunks (valid "obsolete
-        # law", file_processing_service.py:79-89) contributes no rows to
-        # the upsert, so its old chunks must be deleted explicitly or
-        # they'd be served forever under the new processed hash.
-        zero_chunk_docs = (
-            to_process.select(F.col("doc_id").alias("document_id"))
-            .join(
-                chunked.select("document_id").distinct(), "document_id", "left_anti"
-            )
-        )
-        # unconditional: delete_documents already no-ops on empty input
-        # (touched-buckets probe comes back empty) — a count() guard here
-        # evaluated the same anti-join twice per run (r10 review)
-        store.delete_documents(zero_chunk_docs)
-
-        # --- state MERGE (the commit log, op 34) ---------------------------
-        failed_keyed = (
-            to_process.select(F.col("doc_id"), F.col("source_hash").alias("hash"))
-            .join(failed_docs.withColumnRenamed("document_id", "doc_id"), "doc_id")
-        )
-        ok_docs = to_process.select(
-            "doc_id", F.col("source_hash").alias("hash")
-        ).join(failed_keyed.select("doc_id"), "doc_id", "left_anti")
-
-        # ONE job for both tallies (r13, guide §1.2 "don't compute things
-        # twice"): n_failed must equal failed_keyed.count() (inner-join
-        # row count = Σ per-doc distinct-error rows) and n_ok must equal
-        # ok_docs.count() (docs with no error row) — both fall out of one
-        # left join + aggregate over the cached chunked frame, where the
-        # two separate counts each re-ran the to_process join lineage.
-        err_counts = failed_docs.groupBy("document_id").agg(
-            F.count(F.lit(1)).alias("_nerr")
-        )
-        tallies = (
-            to_process.select("doc_id")
-            .join(
-                err_counts.withColumnRenamed("document_id", "doc_id"),
+        outcome = (
+            to_process.select("doc_id", F.col("source_hash").alias("hash"))
+            .join(per_doc, "doc_id", "left")
+            .select(
                 "doc_id",
-                "left",
+                "hash",
+                "error",
+                F.coalesce("chunks", F.lit(0)).alias("chunks"),
+                F.lit(False).alias("removed"),
             )
-            .agg(
-                F.sum(F.coalesce("_nerr", F.lit(0))).alias("nf"),
-                F.count(F.when(F.col("_nerr").isNull(), 1)).alias("nk"),
+            .unionByName(
+                removed.select(
+                    "doc_id",
+                    F.col("source_hash").alias("hash"),
+                    F.lit(None).cast("string").alias("error"),
+                    F.lit(0).cast("long").alias("chunks"),
+                    F.lit(True).alias("removed"),
+                )
             )
-            .first()
+            .localCheckpoint(eager=True)
         )
-        n_failed = int(tallies["nf"] or 0)
-        n_ok = int(tallies["nk"] or 0)
-        if n_ok:
-            state.mark_processed(ok_docs, at)
-        if n_failed:
-            # Mirror the reference's per-doc failure cleanup
-            # (file_processing_service.py cleanup branch): a previously
-            # processed doc whose NEW version fails to parse must not keep
-            # serving its stale old-version chunks — delete them before
-            # marking failed, or `validate` (state vs store) reports the
-            # store inconsistent.
-            store.delete_documents(
-                failed_keyed.select(F.col("doc_id").alias("document_id"))
+        failed = F.col("error").isNotNull()
+        gone = F.col("removed")
+        ok = ~gone & ~failed
+        # A failed, emptied or removed document ends the pass with no
+        # chunks, so its old chunks are deleted.
+        dropped = F.col("chunks") == 0
+        tally = outcome.agg(
+            F.count(F.when(ok, 1)).alias("ok"),
+            F.count(F.when(failed, 1)).alias("failed"),
+            F.count(F.when(gone, 1)).alias("removed"),
+            F.count(F.when(dropped, 1)).alias("dropped"),
+        ).first()
+
+        store.upsert_chunks(
+            embed_chunks_df(
+                chunked.filter(F.col("error").isNull()),
+                provider=provider or mock_hash_provider(config.embedding_dims),
+                model_name=config.embedding_model,
+                embedded_at=at,
+                batch_size=config.embed_batch_size,
+                dims=config.embedding_dims,
             )
-            state.mark_failed(failed_keyed, at)
+        )
+        if tally["dropped"]:
+            store.delete_documents(
+                outcome.filter(dropped).select(F.col("doc_id").alias("document_id"))
+            )
+        if tally["ok"]:
+            state.mark_processed(outcome.filter(ok), at)
+        if tally["failed"]:
+            state.mark_failed(outcome.filter(failed), at)
+        if tally["removed"]:
+            state.remove(outcome.filter(gone))
     finally:
         chunked.unpersist()
 
-    # --- cleanup removed (op 26) -------------------------------------------
-    removed_ids = removed.select(F.col("doc_id").alias("document_id"))
-    n_removed = removed_ids.count()
-    if n_removed:
-        store.delete_documents(removed_ids)
-        state.remove(removed.select("doc_id"))
-
-    return PipelineResult(processed=n_ok, failed=n_failed, removed=n_removed)
+    return PipelineResult(
+        processed=tally["ok"], failed=tally["failed"], removed=tally["removed"]
+    )

@@ -8,8 +8,12 @@ and AQE do the planning rather than hand-scheduling.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: directory holding the package; Python workers get it on their path
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(
@@ -26,6 +30,8 @@ def get_spark(
     - shuffle.partitions defaults to the local core count for tests; on a
       real cluster you would size it to ~2-3× total executor cores (AQE
       coalesces the excess anyway).
+    - The package's parent directory is on the Python workers' path, so
+      UDFs import the package wherever the driver was started.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -42,6 +48,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

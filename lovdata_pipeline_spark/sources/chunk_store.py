@@ -255,12 +255,9 @@ class ChunkStore:
     def delete_documents(self, doc_ids: DataFrame) -> int:
         """DELETE WHERE document_id IN (...); returns deleted count
         (contract: vector_store.py:29-41)."""
-        # Materialize the id set ONCE (r14 ADVICE): pipeline callers pass
-        # join-heavy frames (failed_keyed, zero_chunk_docs), and the four
-        # downstream consumers — the bucket probe, the semi-join, the hit
-        # count, and the keep rewrite — would each re-run that join work
-        # otherwise. localCheckpoint is the single evaluation; everything
-        # below reads the materialized blocks.
+        # Materialize the id set once: callers may pass join-heavy frames,
+        # and the bucket probe, the hit tally and the keep rewrite would
+        # each re-run that work otherwise.
         ids = doc_ids.select("document_id").distinct().localCheckpoint(eager=True)
         # Bucket-prune the probe FROM THE IDS (r13, guide §6 / the class's
         # own point-lookup doctrine): the layout invariant — every stored
@@ -277,11 +274,17 @@ class ChunkStore:
         if not cand:
             return 0
         store = self.read().filter(F.col(_BUCKET).isin(cand))
-        hit = store.join(ids, "document_id", "left_semi")
-        touched = [r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect()]
-        if not touched:
+        # One job gives both the buckets to rewrite and the deleted count.
+        hits = {
+            r[_BUCKET]: r["count"]
+            for r in store.join(ids, "document_id", "left_semi")
+            .groupBy(_BUCKET)
+            .count()
+            .collect()
+        }
+        if not hits:
             return 0
-        n = hit.count()
+        touched = list(hits)
         # Materialize BEFORE the overwrite — the lazy plan references the
         # very files the write replaces.
         keep = (
@@ -300,7 +303,7 @@ class ChunkStore:
         for b in set(touched) - remaining:
             shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
         self.spark.catalog.refreshByPath(self.root)
-        return n
+        return sum(hits.values())
 
     # NOTE on file counts: no compaction op is needed in this layout.
     # Every mutation rewrites its touched buckets *wholesale* (dynamic
