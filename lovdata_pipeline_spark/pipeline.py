@@ -8,12 +8,11 @@ outcome is decided once:
   identify   anti-join manifest vs processed state        (ops 3-8)
   decide     chunk UDF over the changed documents, then one row per
              changed or removed document: (doc_id, new hash, error,
-             good-chunk count, removed), materialized once; the pass's
-             tallies come from it
-  write      one store upsert of the embedded good chunks (ops 9-24),
-             one store delete of every document left without chunks
-             (failed, emptied or removed; op 26), then the state
-             commits (op 34) — each write guarded by its tally
+             removed), materialized once; the pass's tallies come from it
+  write      one store write: every outcome document's chunks become
+             its embedded good chunks, none for a failed, emptied or
+             removed one (ops 9-26); then the state commits (op 34),
+             each guarded by its tally
 
 Failure semantics match the reference's per-document contract
 (file_processing_service.py:48-131): a poison document surfaces as an
@@ -87,28 +86,20 @@ def run_pipeline(
     chunked = chunk_documents_df(to_process, config.chunk).cache()
     try:
         # The pass's one decision: a row per changed or removed document
-        # with its new hash, its error and its good-chunk count. Every
-        # write below is a filter of this materialized frame.
+        # with its new hash and its error. Every write below is driven by
+        # this materialized frame.
         per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(
-            F.max("error").alias("error"),
-            F.count(F.when(F.col("error").isNull(), 1)).alias("chunks"),
+            F.max("error").alias("error")
         )
         outcome = (
             to_process.select("doc_id", F.col("source_hash").alias("hash"))
             .join(per_doc, "doc_id", "left")
-            .select(
-                "doc_id",
-                "hash",
-                "error",
-                F.coalesce("chunks", F.lit(0)).alias("chunks"),
-                F.lit(False).alias("removed"),
-            )
+            .select("doc_id", "hash", "error", F.lit(False).alias("removed"))
             .unionByName(
                 removed.select(
                     "doc_id",
                     F.col("source_hash").alias("hash"),
                     F.lit(None).cast("string").alias("error"),
-                    F.lit(0).cast("long").alias("chunks"),
                     F.lit(True).alias("removed"),
                 )
             )
@@ -117,14 +108,10 @@ def run_pipeline(
         failed = F.col("error").isNotNull()
         gone = F.col("removed")
         ok = ~gone & ~failed
-        # A failed, emptied or removed document ends the pass with no
-        # chunks, so its old chunks are deleted.
-        dropped = F.col("chunks") == 0
         tally = outcome.agg(
             F.count(F.when(ok, 1)).alias("ok"),
             F.count(F.when(failed, 1)).alias("failed"),
             F.count(F.when(gone, 1)).alias("removed"),
-            F.count(F.when(dropped, 1)).alias("dropped"),
         ).first()
 
         store.upsert_chunks(
@@ -135,12 +122,9 @@ def run_pipeline(
                 embedded_at=at,
                 batch_size=config.embed_batch_size,
                 dims=config.embedding_dims,
-            )
+            ),
+            documents=outcome.select(F.col("doc_id").alias("document_id")),
         )
-        if tally["dropped"]:
-            store.delete_documents(
-                outcome.filter(dropped).select(F.col("doc_id").alias("document_id"))
-            )
         if tally["ok"]:
             state.mark_processed(outcome.filter(ok), at)
         if tally["failed"]:

@@ -16,6 +16,12 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
+def default_driver_memory() -> str:
+    """The smaller of 16g and half the host's physical memory."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, physical // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "lovdata_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -46,7 +52,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

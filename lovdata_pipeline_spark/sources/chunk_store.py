@@ -1,28 +1,24 @@
 """Bucketed parquet chunk store — the engine's central table.
 
-The reference's vector store contract (reference: domain/vector_store.py:11-63):
-upsert by chunk_id, delete by document_id, count, distinct doc ids, point
-lookups. Its JSONL backend writes one file per source hash
-(jsonl_vector_store.py:19-30) — a small-files disaster at 100 TB.
+Chunks are hash-bucketed by ``document_id`` into a fixed number of
+partition directories (``bucket=NN``, bucket ``pmod(xxhash64(id), n)``),
+so a document's chunks always live together in one bucket and a point
+lookup by document prunes to one directory.
 
-Scale design here: chunks are hash-bucketed by ``document_id`` into a
-fixed number of partition directories (``bucket=NN``). Every mutation
-touches only the buckets its documents hash into, committed via dynamic
-partition overwrite — Spark's task-commit protocol gives atomic
-per-partition replacement, the parquet-only analog of Delta MERGE/DELETE.
-Point lookups by document prune to one bucket. At cluster scale you'd
-raise ``n_buckets`` (or swap in Delta with the same call sites); the
-layout already co-locates a document's chunks, so per-document reads and
-replacements never shuffle the whole store.
-
-Documents are replaced wholesale on reprocess (the reference rewrites the
-whole per-hash file, jsonl_vector_store.py:41-80), so upsert = delete doc
-∪ insert new — equivalent to chunk_id last-wins because chunk ids are
-positional per document.
+Invariant: a mutation replaces whole documents and rewrites only the
+buckets it touches. ``upsert_chunks`` is the one mutation path — after
+it, each named document's stored chunks are exactly its incoming rows
+(none for a document only named) — and ``delete_documents`` is an upsert
+of no rows. The reference's three writes are this one operation: upsert
+rewrites the document's whole file, failure cleanup and removal delete
+all of its chunks (reference: jsonl_vector_store.py:41-117). Touched
+buckets are committed by dynamic partition overwrite, the parquet-only
+analog of Delta MERGE; untouched buckets are neither read nor written.
 """
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -182,15 +178,7 @@ class ChunkStore:
             return self._empty()
         return self.spark.read.schema(_STORED_SCHEMA).parquet(self.root)
 
-    def _write_buckets(self, df: DataFrame, materialized: bool = False) -> None:
-        # The rewrite plan reads the same files it replaces, so cut lineage
-        # first (localCheckpoint materializes the survivors); with Delta this
-        # whole method is a single MERGE and the checkpoint disappears.
-        # ``materialized=True`` skips it when the caller already holds a
-        # checkpoint of ``df`` (delete_documents — checkpointing twice
-        # doubled every delete's materialization I/O, r10 review).
-        if not materialized:
-            df = df.localCheckpoint(eager=True)
+    def _write_buckets(self, df: DataFrame) -> None:
         # Dynamic overwrite: only partitions present in `df` are replaced.
         (
             df.repartition(_BUCKET)
@@ -214,96 +202,90 @@ class ChunkStore:
 
     # -- mutations (op 24 upsert / op 26 delete) ------------------------------
 
-    def upsert_chunks(self, chunks: DataFrame) -> None:
-        """Replace all chunks of the incoming documents, insert the rest.
+    def upsert_chunks(self, chunks: DataFrame, documents: DataFrame | None = None) -> int:
+        """Make the stored chunks of every document in ``chunks`` or in
+        ``documents`` (a ``document_id`` frame) exactly its rows in
+        ``chunks``; returns the number of stored chunks replaced.
 
-        Touched buckets are recomputed as (survivors ∪ incoming) and
-        atomically swapped; untouched buckets are not read or written.
+        A document listed only in ``documents`` ends with no chunks. Only
+        the buckets holding a replaced or incoming row are rewritten, once,
+        and a bucket left without rows is removed.
         """
-        # Cache the incoming side: the touched-bucket probe AND the write
-        # below each materialize it, and upstream is typically the whole
-        # chunk→embed Python path — without the cache that pipeline runs
-        # twice per upsert. With a real (paid, rate-limited) embedding
-        # provider that is double the API calls, not just double compute.
-        incoming = chunks.withColumn(_BUCKET, self._bucket_col())
+        incoming = chunks.withColumn(_BUCKET, self._bucket_col()).select(
+            *[f.name for f in _STORED_SCHEMA.fields]
+        )
         if not any(Path(self.root).glob(f"{_BUCKET}=*")):
-            # First load into an EMPTY store (r13, guide §5/§1.2): there
-            # are no survivors to merge and the write plan reads no store
-            # files, so the touched-bucket probe, the incoming cache AND
-            # the lineage-cut checkpoint (which guards read-what-you-
-            # overwrite) are all pure overhead — the chunk→embed output
-            # is evaluated exactly ONCE, by the write itself (an empty
-            # incoming writes no partitions, the same no-op as before).
-            self._write_buckets(
-                incoming.select(*[f.name for f in _STORED_SCHEMA.fields]),
-                materialized=True,
-            )
-            return
+            # First load into an EMPTY store: there are no survivors, and the
+            # write plan reads no store files, so the bucket probe, the
+            # incoming cache and the lineage cut are all skipped — the
+            # chunk→embed output is evaluated exactly once, by the write
+            # itself (an empty incoming writes no partitions).
+            self._write_buckets(incoming)
+            return 0
+        # Materialize each side once: upstream of ``chunks`` is typically the
+        # whole chunk→embed Python path (with a paid embedding provider a
+        # second evaluation is a second round of API calls), and the id set
+        # feeds the bucket probe, the aggregate and the rewrite.
         incoming = incoming.cache()
+        ids = incoming.select("document_id")
+        if documents is not None:
+            ids = ids.unionByName(documents.select("document_id"))
+        ids = ids.distinct().cache()
         try:
-            touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
-            if not touched:
-                return
-            existing = self.read().filter(F.col(_BUCKET).isin(touched))
-            survivors = existing.join(
-                incoming.select("document_id").distinct(), "document_id", "left_anti"
+            # A stored document always lives in bucket pmod(xxhash64(id), n)
+            # (enforced on write, data-confirmed on legacy opens), so the
+            # candidate buckets come from the ids without a store scan.
+            cand = [r[0] for r in ids.select(self._bucket_col()).distinct().collect()]
+            if not cand:
+                return 0
+            # Every stored row of the candidate buckets and every incoming
+            # row, tagged kept (0), replaced (1) or incoming (2).
+            rows = (
+                self.read()
+                .filter(F.col(_BUCKET).isin(cand))
+                .join(ids.withColumn("_tag", F.lit(1)), "document_id", "left")
+                .fillna(0, ["_tag"])
+                .unionByName(incoming.withColumn("_tag", F.lit(2)))
             )
-            self._write_buckets(survivors.unionByName(incoming.select(*survivors.columns)))
+            tag = F.col("_tag")
+            per_bucket = (
+                rows.groupBy(_BUCKET)
+                .agg(
+                    F.count(F.when(tag == 1, 1)).alias("replaced"),
+                    F.count(F.when(tag == 2, 1)).alias("incoming"),
+                    F.count(F.when(tag != 1, 1)).alias("left"),
+                )
+                .collect()
+            )
+            touched = [r for r in per_bucket if r["replaced"] or r["incoming"]]
+            rewrite = [r[_BUCKET] for r in touched if r["left"]]
+            if rewrite:
+                # The rewrite plan reads the very files it replaces, so cut
+                # lineage first (with Delta this is one MERGE and the
+                # checkpoint disappears).
+                self._write_buckets(
+                    rows.filter((tag != 1) & F.col(_BUCKET).isin(rewrite))
+                    .drop("_tag")
+                    .localCheckpoint(eager=True)
+                )
+            # Dynamic overwrite never writes a partition that ended up empty,
+            # so an emptied bucket would keep its old files — drop it
+            # explicitly (the reference unlinks emptied JSONL files,
+            # jsonl_vector_store.py:104-117).
+            emptied = [r[_BUCKET] for r in touched if not r["left"]]
+            for b in emptied:
+                shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
+            if emptied:
+                self.spark.catalog.refreshByPath(self.root)
+            return sum(r["replaced"] for r in per_bucket)
         finally:
             incoming.unpersist()
+            ids.unpersist()
 
     def delete_documents(self, doc_ids: DataFrame) -> int:
         """DELETE WHERE document_id IN (...); returns deleted count
         (contract: vector_store.py:29-41)."""
-        # Materialize the id set once: callers may pass join-heavy frames,
-        # and the bucket probe, the hit tally and the keep rewrite would
-        # each re-run that work otherwise.
-        ids = doc_ids.select("document_id").distinct().localCheckpoint(eager=True)
-        # Bucket-prune the probe FROM THE IDS (r13, guide §6 / the class's
-        # own point-lookup doctrine): the layout invariant — every stored
-        # document lives in bucket pmod(xxhash64(document_id), n_buckets),
-        # enforced on write and data-confirmed on legacy opens — means the
-        # candidate buckets are computable without touching the store. An
-        # empty delete set (the common per-run pipeline case) now costs
-        # one tiny job over the ids instead of a full store scan, and a
-        # real delete scans only its candidate buckets.
-        cand = [
-            r["_b"]
-            for r in ids.select(self._bucket_col().alias("_b")).distinct().collect()
-        ]
-        if not cand:
-            return 0
-        store = self.read().filter(F.col(_BUCKET).isin(cand))
-        # One job gives both the buckets to rewrite and the deleted count.
-        hits = {
-            r[_BUCKET]: r["count"]
-            for r in store.join(ids, "document_id", "left_semi")
-            .groupBy(_BUCKET)
-            .count()
-            .collect()
-        }
-        if not hits:
-            return 0
-        touched = list(hits)
-        # Materialize BEFORE the overwrite — the lazy plan references the
-        # very files the write replaces.
-        keep = (
-            store.filter(F.col(_BUCKET).isin(touched))
-            .join(ids, "document_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        self._write_buckets(keep, materialized=True)
-        # Dynamic overwrite never writes a partition that ended up empty, so
-        # a fully-emptied bucket would keep its old files — drop it explicitly
-        # (the analog of the reference unlinking emptied JSONL files,
-        # jsonl_vector_store.py:104-117).
-        import shutil
-
-        remaining = {r[_BUCKET] for r in keep.select(_BUCKET).distinct().collect()}
-        for b in set(touched) - remaining:
-            shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
-        self.spark.catalog.refreshByPath(self.root)
-        return sum(hits.values())
+        return self.upsert_chunks(self._empty(), documents=doc_ids)
 
     # NOTE on file counts: no compaction op is needed in this layout.
     # Every mutation rewrites its touched buckets *wholesale* (dynamic

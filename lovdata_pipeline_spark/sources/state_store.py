@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from lovdata_pipeline_spark.schemas import STATE_SCHEMA
 
 _PREFIX = "v_"
+#: snapshots kept after a commit, the new one included
+_KEEP = 3
 
 
 class StateStore:
@@ -57,7 +59,7 @@ class StateStore:
             str(self.root / f"{_PREFIX}{versions[-1]}")
         )
 
-    def _commit(self, df: DataFrame, keep: int = 3) -> None:
+    def _commit(self, df: DataFrame) -> None:
         versions = self._versions()
         nxt = (versions[-1] + 1) if versions else 0
         target = self.root / f"{_PREFIX}{nxt}"
@@ -69,7 +71,7 @@ class StateStore:
         df.select([f.name for f in STATE_SCHEMA.fields]).repartition(1).write.mode(
             "overwrite"
         ).parquet(str(target))
-        for old in versions[: max(0, len(versions) + 1 - keep)]:
+        for old in versions[: max(0, len(versions) + 1 - _KEEP)]:
             shutil.rmtree(self.root / f"{_PREFIX}{old}", ignore_errors=True)
 
     # -- MERGE-style mutations ----------------------------------------------

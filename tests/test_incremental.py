@@ -179,6 +179,84 @@ class TestStores:
         assert store.chunks_for_document("doc1").count() == 0
         assert store.count() == n - n_doc1
 
+    @staticmethod
+    def _lone_bucket_store(spark, tmp_path):
+        """A 32-bucket store holding RUN1, where each document sits alone
+        in its bucket: doc1 in 27, doc2 in 23, doc3 in 11."""
+        from lovdata_pipeline_spark.chunking import chunk_documents_df
+        from lovdata_pipeline_spark.embedding import embed_chunks_df
+
+        store = ChunkStore(spark, tmp_path / "chunks32", n_buckets=32)
+        docs = _docs(spark, _with_xml(RUN1))
+        store.upsert_chunks(embed_chunks_df(chunk_documents_df(docs, CFG.chunk), dims=8))
+        placed = {
+            r.document_id: r.bucket
+            for r in store.read().select("document_id", "bucket").distinct().collect()
+        }
+        assert placed == {"doc1": 27, "doc2": 23, "doc3": 11}
+        return store
+
+    @staticmethod
+    def _bucket_files(store, bucket):
+        from pathlib import Path
+
+        return {
+            p.name: (p.stat().st_size, p.stat().st_mtime_ns)
+            for p in (Path(store.root) / f"bucket={bucket}").glob("*.parquet")
+        }
+
+    def test_upsert_with_documents_replaces_and_drops(self, spark, tmp_path):
+        from pathlib import Path
+
+        from lovdata_pipeline_spark.chunking import chunk_documents_df
+        from lovdata_pipeline_spark.embedding import embed_chunks_df
+
+        store = self._lone_bucket_store(spark, tmp_path)
+        n_doc1 = store.chunks_for_document("doc1").count()
+        n_doc3 = store.chunks_for_document("doc3").count()
+        doc2_rows = sorted(map(tuple, store.chunks_for_document("doc2").collect()))
+        doc2_files = self._bucket_files(store, 23)
+        assert doc2_files
+
+        # doc1 is re-chunked from new content; doc3 is named only in the ids
+        v2 = _docs(
+            spark,
+            [("doc1", "ds", "p/1.xml", fixtures.law_with_list(), "h1_v2", "modified")],
+        )
+        new_doc1 = embed_chunks_df(chunk_documents_df(v2, CFG.chunk), dims=8)
+        replaced = store.upsert_chunks(
+            new_doc1,
+            documents=spark.createDataFrame([("doc1",), ("doc3",)], "document_id string"),
+        )
+
+        assert replaced == n_doc1 + n_doc3
+        assert {r.chunk_id for r in store.chunks_for_document("doc1").collect()} == {
+            r.chunk_id for r in new_doc1.collect()
+        }
+        assert {r.source_hash for r in store.chunks_for_document("doc1").collect()} == {"h1_v2"}
+        assert store.chunks_for_document("doc3").count() == 0
+        assert not (Path(store.root) / "bucket=11").exists()
+        # the untouched bucket is neither rewritten nor changed
+        assert self._bucket_files(store, 23) == doc2_files
+        assert sorted(map(tuple, store.chunks_for_document("doc2").collect())) == doc2_rows
+
+    def test_delete_removes_emptied_bucket(self, spark, tmp_path):
+        from pathlib import Path
+
+        store = self._lone_bucket_store(spark, tmp_path)
+        n_doc2 = store.chunks_for_document("doc2").count()
+        doc1_files = self._bucket_files(store, 27)
+
+        deleted = store.delete_documents(
+            spark.createDataFrame([("doc2",)], "document_id string")
+        )
+
+        assert deleted == n_doc2
+        assert not (Path(store.root) / "bucket=23").exists()
+        assert store.chunks_for_document("doc2").count() == 0
+        assert self._bucket_files(store, 27) == doc1_files
+        assert sorted(store.distinct_document_ids().toPandas().document_id) == ["doc1", "doc3"]
+
     def test_state_status_counts(self, spark, stores):
         _, state = stores
         state.mark_processed(

@@ -36,3 +36,18 @@ def test_workers_import_package_outside_repo_root(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "chunks 1" in proc.stdout
+
+
+def test_default_driver_memory_is_half_of_ram_capped_at_16g(monkeypatch):
+    from lovdata_pipeline_spark import session
+
+    page = 4096
+
+    def host(ram_bytes):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_bytes // page}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        return session.default_driver_memory()
+
+    assert host(15 * 2**30) == "7680m"
+    assert host(32 * 2**30) == "16384m"
+    assert host(256 * 2**30) == "16384m"
